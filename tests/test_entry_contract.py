@@ -3,6 +3,8 @@ oracle_sql() covers the queries it claims."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -44,16 +46,36 @@ def test_oracle_keys_subset_of_queries():
 
 
 def test_release_session_caches(spark, sf_dir):
-    """One teardown call releases every session-scoped memoized artifact:
-    semdedup assignment, IVFPQ model, minhash pairs, bm25 index dirs, and
-    the curation flagship's persisted stage boundaries."""
-    entrymod.queries()["semdedup"](spark, sf_dir).count()
-    entrymod.queries()["rerank_topk"](spark, sf_dir).count()
-    assert entrymod._SEMDEDUP_ASSIGN_CACHE
-    assert entrymod._IVFPQ_MODEL_CACHE
+    """One teardown call releases every session-scoped artifact: persisted
+    model and assignment frames are unpersisted, index directories are
+    removed, and plan memos (the library's included) are dropped. Until
+    then the memos hit."""
+    from transmog_spark import artifacts
+    from transmog_spark.pipeline import token_features
+
+    qs = entrymod.queries()
+    for name in ("semdedup", "rerank_topk", "nb_classify", "bm25_topk_indexed"):
+        qs[name](spark, sf_dir).count()
+    # the queries themselves filled the registry ...
+    filled = set(artifacts._ENTRIES)
+    for kind in ("semdedup_assign", "ivfpq_model", "nb_model", "bm25idx"):
+        assert (kind, sf_dir) in filled, kind
+    # ... so each lookup below hits, returning the frames they persisted
+    persisted = [
+        entrymod._semdedup_assigned(spark, sf_dir),
+        entrymod._ivfpq_model(spark, sf_dir)[1],
+        *entrymod._nb_model(spark, sf_dir),
+    ]
+    index_dir = entrymod._bm25_index_cached(spark, sf_dir)
+    assert set(artifacts._ENTRIES) == filled
+    plan = token_features(spark, 50)
+    assert token_features(spark, 50) is plan
+    assert all(df.is_cached for df in persisted)
+    assert os.path.isdir(index_dir)
+
     entrymod.release_session_caches()
-    assert not entrymod._SEMDEDUP_ASSIGN_CACHE
-    assert not entrymod._IVFPQ_MODEL_CACHE
-    assert not entrymod._PAIRS_CACHE
-    assert not entrymod._BM25_INDEX_CACHE
-    assert not entrymod._CURATION_PERSISTS
+
+    assert not artifacts._ENTRIES
+    assert not any(df.is_cached for df in persisted)
+    assert not os.path.exists(index_dir)
+    assert token_features(spark, 50) is not plan

@@ -11,6 +11,7 @@ import re
 import pytest
 
 import __spark_entry__ as entrymod
+from transmog_spark import artifacts
 
 
 def _plan(spark, sf_dir, name, mode: str = "formatted") -> str:
@@ -138,15 +139,21 @@ def test_minhash_shuffles_longs_not_shingles(spark, sf_dir):
     # shingle arrays never appear in an exchange's output schema
     for ex in re.finditer(r"Exchange hashpartitioning[^\n]*\n", plan):
         assert "__sh" not in ex.group(0)
+    # the null-gram guard filters the generated column above the outer
+    # explode; no inferred size(..) > 0 filter re-shingles at the scan
+    conds = re.findall(r"Condition : ([^\n]*)", plan)
+    assert any("isnotnull(__s#" in c for c in conds)
+    assert not any("size(" in c for c in conds)
 
 
 def test_whole_stage_codegen_everywhere(spark, sf_dir):
     # AQE hides codegen until the final plan; disable it for this check.
-    # The prepared-plan registry cache (entry `_prepared`) would hand back
-    # frames whose physical plan was already derived under AQE, so clear
-    # it on both sides of the conf toggle to plan fresh each way.
+    # The prepared-plan memo (entry `_prepared`, held in the session-artifact
+    # registry) would hand back frames whose physical plan was already
+    # derived under AQE, so release it on both sides of the conf toggle to
+    # plan fresh each way.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    entrymod._PLAN_CACHE.clear()
+    artifacts.release()
     try:
         for q in ("tpch_q1", "lag_lead", "event_type_stats"):
             plan = _plan(spark, sf_dir, q, mode="codegen")
@@ -154,7 +161,7 @@ def test_whole_stage_codegen_everywhere(spark, sf_dir):
             assert m and int(m.group(1)) >= 1, q
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-        entrymod._PLAN_CACHE.clear()
+        artifacts.release()
 
 
 def test_token_chunks_is_narrow(spark, sf_dir):

@@ -518,11 +518,13 @@ def decontaminate_fuzzy(
             F.col(id_col).alias(tag), word_shingles(F.col(text_col), shingle_n).alias("__sh")
         )
         sizes = sh.select(tag, F.size("__sh").alias(f"{tag}_n"))
-        # explode_outer: word_shingles never yields NULL/empty, and inner
-        # explode's inferred generate filter would re-evaluate the shingle
-        # expression at the scan (dedup.minhash_signatures note)
-        grams = sh.select(tag, F.explode_outer("__sh").alias("__s")).select(
-            tag, md5_long(F.col("__s")).alias("g")
+        # explode_outer + isNotNull: inner explode's inferred generate
+        # filter would re-evaluate the shingle expression at the scan
+        # (dedup.minhash_signatures note)
+        grams = (
+            sh.select(tag, F.explode_outer("__sh").alias("__s"))
+            .where(F.col("__s").isNotNull())
+            .select(tag, md5_long(F.col("__s")).alias("g"))
         )
         return grams, sizes
 
@@ -1191,12 +1193,16 @@ def source_overlap(
     """
     from transmog_spark.operators.dedup import word_shingles
 
-    # explode_outer: word_shingles never yields NULL/empty (see
-    # dedup.minhash_signatures) — no inferred scan-side filter
-    grams = df.select(
-        F.col(source_col).alias("__src"),
-        F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("__g"),
-    ).select("__src", md5_long(F.col("__g")).alias("__gh"))
+    # explode_outer + isNotNull (see dedup.minhash_signatures) — no
+    # inferred scan-side filter, and no NULL gram grouped across sources
+    grams = (
+        df.select(
+            F.col(source_col).alias("__src"),
+            F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("__g"),
+        )
+        .where(F.col("__g").isNotNull())
+        .select("__src", md5_long(F.col("__g")).alias("__gh"))
+    )
     # one shuffle: per-gram distinct source set (bounded by #sources)
     per_gram = grams.groupBy("__gh").agg(
         F.sort_array(F.collect_set("__src")).alias("__srcs")

@@ -66,27 +66,6 @@ def word_shingles(text: Column, n: int = 3) -> Column:
     return F.array_distinct(out)
 
 
-def _seeded_hash(seed: int):
-    # NB: factory, not `lambda s, b=b: ...` — PySpark passes the element
-    # INDEX as the 2nd arg to any 2-parameter HOF lambda (defaults count).
-    return lambda s: md5_long(F.concat(F.lit(f"{seed}#"), s))
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """array<long> of per-seed minima: min over shingles of h(seed#shingle).
-
-    Column-expression form — fine for a handful of hashes on small frames.
-    The scale path is ``minhash_signatures`` below (explode + partial-agg
-    min): Catalyst inlines the shingle expression into every one of the
-    ``num_hashes`` lambdas here, which bloats codegen and re-evaluates the
-    shingling; the DataFrame form keeps expressions tiny and shuffles only
-    ``num_hashes`` longs per doc (map-side combine), not shingle arrays.
-    """
-    return F.array(
-        *[F.array_min(F.transform(shingles, _seeded_hash(b))) for b in range(num_hashes)]
-    )
-
-
 def shingle_frame(df: DataFrame, id_col: str, text_col: str, shingle_n: int) -> DataFrame:
     """(__id, __sh: array<string>) — distinct word shingles, computed ONCE."""
     return df.select(
@@ -111,8 +90,13 @@ def minhash_signatures(
     # per row before the projection evaluates it again (2x the dominant
     # map cost at any scale; measured 0.7 s single-core per branch at
     # bench scale, below the adaptive spread). Outer generate infers no
-    # filter (InferFiltersFromGenerate is outer=false only).
-    ex = sh.select("__id", F.explode_outer("__sh").alias("__s"))
+    # filter (InferFiltersFromGenerate is outer=false only). The isNotNull
+    # on the GENERATED column drops the NULL row outer emits for an empty
+    # array, should word_shingles ever return one; it stays above the
+    # generate, so the scan keeps no size(..)>0 filter.
+    ex = sh.select("__id", F.explode_outer("__sh").alias("__s")).where(
+        F.col("__s").isNotNull()
+    )
     hashed = ex.select(
         "__id",
         *[
@@ -223,9 +207,10 @@ def ngram_jaccard_pairs(
     sh = shingle_frame(df, id_col, text_col, shingle_n)
     # blocking key = global min shingle hash, via explode + partial-agg min
     minh = (
-        # explode_outer: see minhash_signatures — avoids the inferred
-        # generate filter re-evaluating word_shingles at the scan
+        # explode_outer + isNotNull: see minhash_signatures — avoids the
+        # inferred generate filter re-evaluating word_shingles at the scan
         sh.select("__id", F.explode_outer("__sh").alias("__s"))
+        .where(F.col("__s").isNotNull())
         .select("__id", md5_long(F.col("__s")).alias("__h"))
         .groupBy("__id")
         .agg(F.min("__h").alias("__minh"))
@@ -847,9 +832,10 @@ def containment_pairs(
     """
     sh = shingle_frame(df, id_col, text_col, shingle_n)
     minh = (
-        # explode_outer: see minhash_signatures — avoids the inferred
-        # generate filter re-evaluating word_shingles at the scan
+        # explode_outer + isNotNull: see minhash_signatures — avoids the
+        # inferred generate filter re-evaluating word_shingles at the scan
         sh.select("__id", F.explode_outer("__sh").alias("__s"))
+        .where(F.col("__s").isNotNull())
         .select("__id", md5_long(F.col("__s")).alias("__h"))
         .groupBy("__id")
         .agg(F.min("__h").alias("__minh"))

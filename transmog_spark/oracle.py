@@ -915,19 +915,6 @@ WHERE rank <= {k}
 """
 
 
-def hash_sample_sql(
-    *,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    fraction: float = 0.1,
-    seed: str = "smpl",
-    buckets: int = 10_000,
-    select: str = "doc_id, source, n_chars",
-) -> str:
-    h = duck_md5_long(f"'{seed}#' || CAST({id_col} AS VARCHAR)")
-    return f"SELECT {select} FROM {table} WHERE {h} % {buckets} < {int(fraction * buckets)}"
-
-
 def stratified_sample_sql(
     *,
     table: str = "documents",

@@ -19,15 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from transmog_spark.artifacts import memoized_plan
 from transmog_spark.config import EngineConfig
 from transmog_spark.operators.asof import asof_join
 from transmog_spark.operators.flatten import flatten
 from transmog_spark.operators.windows import sessionize, with_lag_lead, with_session_stats
 
 PROPS_SCHEMA = T.StructType([T.StructField("k", T.IntegerType())])
-
-# token_features prepared-plan memo — see the note inside token_features.
-_TOKEN_FEATURES_PLANS: dict[tuple, DataFrame] = {}
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,6 +70,11 @@ def event_features(
     return with_session_stats(feats, "user_id", agg_cols={"value": ["sum"]})
 
 
+# Prepared-plan memo (the __spark_entry__._prepared posture): the composed
+# flatten -> as-of -> windows tree costs ~0.9 s of identical driver-side
+# derivation per call. Plan object only — every execution recomputes from
+# the synthetic generators.
+@memoized_plan
 def token_features(
     spark: SparkSession,
     n_docs: int,
@@ -102,18 +105,6 @@ def token_features(
     Returns one row per (doc_id, revision ts) with tokens intact.
     """
     from transmog_spark.sources import synth
-
-    # Prepared-plan memo (the __spark_entry__._prepared posture): the
-    # composed flatten -> as-of -> windows tree costs ~0.9 s of identical
-    # driver-side derivation per call. Plan object only — every execution
-    # recomputes from the synthetic generators.
-    memo_key = (
-        spark.sparkContext.applicationId,
-        n_docs, seed, salt_buckets, gap_seconds, partitions, hash_mode,
-    )
-    cached = _TOKEN_FEATURES_PLANS.get(memo_key)
-    if cached is not None:
-        return cached
 
     kw = {"seed": seed, "partitions": partitions, "hash_mode": hash_mode}
     seqs = synth.sequences(spark, n_docs, **kw)
@@ -150,7 +141,7 @@ def token_features(
     pit = sessionize(pit, "doc_id", ["ts", "rev"], gap_seconds=gap_seconds)
     pit = with_lag_lead(pit, "doc_id", ["ts", "rev"], ["rev_n_tok"])
 
-    out = pit.join(
+    return pit.join(
         seqs.select("doc_id", "tokens", "n_tok", "source"), "doc_id", "inner"
     ).select(
         "doc_id",
@@ -166,5 +157,3 @@ def token_features(
         "tokens",
         "n_tok",
     )
-    _TOKEN_FEATURES_PLANS[memo_key] = out
-    return out

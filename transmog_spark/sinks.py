@@ -27,9 +27,6 @@ if TYPE_CHECKING:
 
 _FORMATS = {"csv", "parquet", "orc", "avro", "json"}
 
-# spark-avro is a separate artifact; probe lazily and degrade clearly.
-_AVRO_CHECKED: dict[str, bool] = {}
-
 
 class MissingDependencyError(RuntimeError):
     """Format backend unavailable (reference writers/__init__.py:29-130)."""

@@ -20,12 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-EPOCH = "2024-01-01 00:00:00"  # fixed basis; no wall-clock (determinism)
+from transmog_spark.artifacts import memoized_plan
 
-# sequences() prepared-plan memo (the pipeline.token_features posture):
-# the generator tree re-derives identically per call; plan objects only,
-# every execution regenerates rows from spark.range.
-_SEQUENCES_PLANS: dict[tuple, DataFrame] = {}
+EPOCH = "2024-01-01 00:00:00"  # fixed basis; no wall-clock (determinism)
 EPOCH_S = 1704067200  # unix seconds of EPOCH (UTC session) — mirrored in SQL
 
 
@@ -44,6 +41,10 @@ def _h(seed: str, *cols, mode: str = "xxhash") -> F.Column:
     return F.abs(F.xxhash64(F.lit(seed), *cols))
 
 
+# sequences()/sequence_meta() are prepared-plan memos (the
+# pipeline.token_features posture): the generator tree re-derives
+# identically per call; every execution regenerates rows from spark.range.
+@memoized_plan
 def sequences(
     spark: SparkSession,
     n_docs: int,
@@ -57,14 +58,6 @@ def sequences(
     partitions: int | None = None,
     hash_mode: str = "xxhash",
 ) -> DataFrame:
-    memo_key = (
-        spark.sparkContext.applicationId,
-        n_docs, vocab, min_len, max_len, n_sources, hot_share, seed,
-        partitions, hash_mode,
-    )
-    cached = _SEQUENCES_PLANS.get(memo_key)
-    if cached is not None:
-        return cached
     df = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
     def h(s, *c):
         return _h(s, *c, mode=hash_mode)
@@ -82,17 +75,16 @@ def sequences(
     ts = F.timestamp_seconds(
         F.unix_timestamp(F.lit(EPOCH)) + (h(seed + ":ts", F.col("id")) % (86400 * 30))
     )
-    out = df.select(
+    return df.select(
         doc_id.alias("doc_id"),
         tokens.alias("tokens"),
         n_tok.alias("n_tok"),
         source.alias("source"),
         ts.alias("ts"),
     )
-    _SEQUENCES_PLANS[memo_key] = out
-    return out
 
 
+@memoized_plan
 def sequence_meta(
     spark: SparkSession,
     n_docs: int,
@@ -103,14 +95,6 @@ def sequence_meta(
     hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Nested metadata per doc: struct<lang, quality, revisions:array<struct>>."""
-    memo_key = (
-        "meta",
-        spark.sparkContext.applicationId,
-        n_docs, n_revisions, seed, partitions, hash_mode,
-    )
-    cached = _SEQUENCES_PLANS.get(memo_key)
-    if cached is not None:
-        return cached
     df = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
     def h(s, *c):
         return _h(s, *c, mode=hash_mode)
@@ -140,15 +124,13 @@ def sequence_meta(
     source = F.when(hot, F.lit("src_hot")).otherwise(
         F.format_string("src_%02d", (h(seed + ":srcn", F.col("id")) % 20).cast("int"))
     )
-    out = df.select(
+    return df.select(
         doc_id.alias("doc_id"),
         source.alias("source"),
         F.struct(lang.alias("lang"), quality.alias("quality"), revisions.alias("revisions")).alias(
             "meta"
         ),
     )
-    _SEQUENCES_PLANS[memo_key] = out
-    return out
 
 
 def feature_events(

@@ -21,13 +21,6 @@ def is_catalog_ref(ref: str) -> bool:
     return "/" not in ref and "." in ref and not ref.endswith(".parquet")
 
 
-def iceberg_configured(spark: SparkSession, ref: str) -> bool:
-    if not is_catalog_ref(ref):
-        return False
-    catalog = ref.split(".", 1)[0]
-    return spark.conf.get(f"spark.sql.catalog.{catalog}", None) is not None
-
-
 def read_table(spark: SparkSession, ref: str) -> DataFrame:
     if is_catalog_ref(ref):
         return spark.read.table(ref)
