@@ -5,14 +5,16 @@ The north-rule production job: over an Iceberg (or parquet) table of
 pre-tokenized training sequences ``(doc_id, tokens, n_tok, source, ts)``
 and a feature-event table ``(doc_id, ts, feature_v, ...)``, compute the
 point-in-time feature frame — as-of join (zero temporal leakage) +
-gap-sessionize + lag/lead — and append it to the output table,
-checkpointing a per-partition watermark after each ``source`` slice so a
-killed backfill resumes where it stopped.
+gap-sessionize + lag/lead — and write it to the output table
+partitioned by ``source``. Every uncommitted ``source`` slice goes through
+one plan and one write, then one checkpoint append records a watermark per
+slice (``checkpoint.write_slices``), so a killed backfill resumes at the
+slices it had not committed.
 
 Idempotency contract: this is a ONE-SHOT backfill over a fixed input range.
 A slice is either fully committed (skipped on resume) or not committed
 (fully re-run; dynamic partition overwrite replaces any partial write, so a
-crash between data-write and watermark-commit cannot duplicate rows).
+crash between data-write and the checkpoint append cannot duplicate rows).
 Incremental top-ups of NEW data belong in a fresh run over a new range —
 appending into an already-committed slice would need (source, date-bucket)
 partitioning instead.
@@ -39,7 +41,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -87,7 +88,7 @@ def build_inputs(spark, args):
 
 
 def feature_frame(seqs, events, args):
-    """PIT features for one (already filtered) slice of the sequence table."""
+    """PIT features for the (already filtered) slices of the sequence table."""
     from transmog_spark.operators.asof import asof_join
     from transmog_spark.operators.windows import sessionize, with_lag_lead
 
@@ -114,9 +115,8 @@ def feature_frame(seqs, events, args):
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
-    from transmog_spark.checkpoint import CheckpointStore
+    from transmog_spark.checkpoint import CheckpointStore, write_slices
     from transmog_spark.session import get_spark
-    from transmog_spark.sources.tables import write_table
 
     spark = get_spark(
         app_name="transmog_backfill", shuffle_partitions=args.shuffle_partitions
@@ -125,62 +125,35 @@ def main(argv: list[str] | None = None) -> int:
     store = CheckpointStore(spark, args.checkpoint)
     seqs, events = build_inputs(spark, args)
 
+    # slice list is tiny (one per source) — a driver-side list is fine
+    keys = sorted(r[0] for r in seqs.select(args.partition_col).distinct().collect())
+
+    def layout(part):
+        # one plan over every pending slice, so `events` is shuffled once
+        # per run, not once per slice. Range-partition on (slice, event
+        # time): output files are slice- and time-clustered (row-group
+        # min/max enable time-range pruning downstream), the north rule's
+        # "range-partitioned" layout; partition count follows the session's
+        # shuffle sizing
+        out = feature_frame(part, events, args)
+        return out.repartitionByRange(
+            F.col(args.partition_col), F.col(args.ts_col)
+        ).sortWithinPartitions("doc_id", args.ts_col)
+
     # resume at SLICE granularity: a committed partition is skipped entirely
     # — never ts-filtered. Filtering a committed slice and then
     # partition-overwriting it would destroy the committed rows whenever the
     # input grew after the commit (the one-shot contract, now enforced).
-    done = store.committed_keys()
-
-    # slice list is tiny (one per source) — a driver-side list is fine;
-    # each slice is still processed fully distributed
-    all_keys = [
-        r[0]
-        for r in seqs.select(args.partition_col).distinct().orderBy(args.partition_col).collect()
-    ]
-    slices = [k for k in all_keys if k not in done]
-    if len(all_keys) != len(slices):
-        print(f"[backfill {run_id}] skipping {len(all_keys) - len(slices)} committed slice(s)")
-    print(f"[backfill {run_id}] {len(slices)} partition slice(s) to process")
-
-    from transmog_spark.sources.tables import read_table
-
-    for pk in slices:
-        t0 = time.monotonic()
-        part = seqs.where(F.col(args.partition_col) == pk)
-        out = feature_frame(part, events, args)
-        # range-partition the slice by event time before writing: output
-        # files become time-clustered (row-group min/max enable time-range
-        # pruning downstream), matching the north rule's "range-partitioned"
-        # layout; partition count follows the session's shuffle sizing
-        out = out.repartitionByRange(F.col(args.ts_col)).sortWithinPartitions(
-            "doc_id", args.ts_col
-        )
-        # dynamic partition overwrite: a crash between this write and the
-        # watermark commit below leaves the slice partially written — the
-        # resume re-runs the slice and REPLACES its partition (idempotent)
-        write_table(
-            out, args.output, mode="overwrite_partitions", partition_by=[args.partition_col]
-        )
-
-        # lineage stats from the WRITTEN slice, not a second input scan:
-        # partition pruning keeps the read to this slice's files and column
-        # pruning to the ts column. rows_out is the true output count; the
-        # pipeline is row-preserving (as-of/sessionize/lag add columns, not
-        # rows), so rows_in == rows_out by construction.
-        written = read_table(spark, args.output).where(F.col(args.partition_col) == pk)
-        stats = written.agg(
-            F.max(args.ts_col).alias("mx"), F.count(F.lit(1)).alias("n")
-        ).collect()[0]
-        store.commit(
-            pk,
-            stats["mx"],
-            rows_in=stats["n"],
-            rows_out=stats["n"],
-            run_id=run_id,
-            started_at=t0,
-        )
-        print(f"[backfill {run_id}] committed {pk}: rows={stats['n']}")
-
+    # The pipeline is row-preserving (as-of/sessionize/lag add columns, not
+    # rows), so each slice commits rows_in == rows_out == its written rows.
+    committed = write_slices(
+        store, seqs, args.output, partition_col=args.partition_col, keys=keys,
+        run_id=run_id, ts_col=args.ts_col, transform=layout,
+    )
+    print(
+        f"[backfill {run_id}] skipped {len(keys) - len(committed)} committed "
+        f"slice(s); committed {committed}"
+    )
     print(f"[backfill {run_id}] done")
     return 0
 

@@ -19,10 +19,10 @@ The compaction:
    per near-dup cluster,
 3. duplicated-span strip over the surviving set (token counts recomputed
    from raw text — per-batch counts are superseded, not trusted),
-4. checkpointed partition rewrite: the kept frame is written one
-   ``source`` slice at a time with dynamic partition overwrite, a
-   watermark committed after each slice (``checkpoint.py``) — a killed
-   compaction resumes at the first uncommitted slice. The global verdict
+4. checkpointed partition rewrite: every uncommitted ``source`` slice of
+   the kept frame goes out in one dynamic-partition-overwrite write, then
+   one checkpoint append records them all (``checkpoint.write_slices``) —
+   a killed compaction re-runs every slice it had not committed. The global verdict
    frame is deterministic (seeded hashes, min-id rules), so a resumed
    run recomputes the identical verdicts.
 
@@ -51,7 +51,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -114,9 +113,8 @@ def compact_frame(store, args):
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
-    from transmog_spark.checkpoint import CheckpointStore
+    from transmog_spark.checkpoint import CheckpointStore, write_slices
     from transmog_spark.session import get_spark
-    from transmog_spark.sources.tables import write_table
 
     spark = get_spark(
         app_name="transmog_compact", shuffle_partitions=args.shuffle_partitions
@@ -125,41 +123,19 @@ def main(argv: list[str] | None = None) -> int:
     ckpt = CheckpointStore(spark, args.checkpoint)
     store = spark.read.parquet(args.store)
 
-    # the global verdict frame feeds one write per source slice — persist
-    # the stage boundary (the curation-pipeline persist idiom: ReuseExchange
-    # never fires across the differing per-slice projections)
+    # the global verdict frame feeds the slice listing and the write —
+    # persist the stage boundary so the chain runs once
     kept = compact_frame(store, args).persist()
     try:
-        done = ckpt.committed_keys()
-        all_keys = [
-            r[0]
-            for r in kept.select(args.source_col).distinct()
-            .orderBy(args.source_col).collect()
-        ]
-        slices = [k for k in all_keys if str(k) not in done]
-        if len(all_keys) != len(slices):
-            print(
-                f"[compact {run_id}] skipping {len(all_keys) - len(slices)} "
-                "committed slice(s)"
-            )
-        print(f"[compact {run_id}] {len(slices)} source slice(s) to rewrite")
-        for src in slices:
-            t0 = time.monotonic()
-            part = kept.where(F.col(args.source_col) == src)
-            write_table(
-                part, args.output, mode="overwrite_partitions",
-                partition_by=[args.source_col],
-            )
-            n = (
-                spark.read.parquet(args.output)
-                .where(F.col(args.source_col) == src)
-                .count()
-            )
-            ckpt.commit(
-                str(src), None, rows_in=n, rows_out=n, run_id=run_id,
-                started_at=t0,
-            )
-            print(f"[compact {run_id}] committed {src}: rows={n}")
+        keys = sorted(r[0] for r in kept.select(args.source_col).distinct().collect())
+        committed = write_slices(
+            ckpt, kept, args.output, partition_col=args.source_col, keys=keys,
+            run_id=run_id,
+        )
+        print(
+            f"[compact {run_id}] skipped {len(keys) - len(committed)} "
+            f"committed slice(s); committed {committed}"
+        )
     finally:
         kept.unpersist()
     print(f"[compact {run_id}] done")

@@ -12,10 +12,11 @@ offsets → per-shard manifests → CHECKPOINTED shard writes.
 
 Resume: every stage is deterministic (seeded hashes, min-id rules,
 md5 permutation keys), so a killed run recomputes identical verdicts;
-shards are written one at a time with a watermark committed after each
-(``checkpoint.py``) and a restart skips committed shards. The manifest
-table carries each shard's row count, token total and an order-sensitive
-id digest, so a written shard verifies without re-reading the corpus.
+every uncommitted shard goes out in one partitioned write, then one
+checkpoint append records them all (``checkpoint.write_slices``), and a
+restart skips committed shards. The manifest table carries each shard's
+row count, token total and an order-sensitive id digest, so a written
+shard verifies without re-reading the corpus.
 
 Cluster usage:
 
@@ -37,7 +38,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -105,7 +105,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
 
 def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
-    from transmog_spark.checkpoint import CheckpointStore
+    from transmog_spark.checkpoint import CheckpointStore, write_slices
     from transmog_spark.operators.corpus import shard_manifest, training_order
     from transmog_spark.session import get_spark
     from transmog_spark.sources.tables import write_table
@@ -225,8 +225,7 @@ def main(argv: list[str] | None = None) -> int:
     sharded = kept.join(
         order.select(args.id_col, "shard", "shard_pos", "tok_offset"),
         args.id_col,
-    ).persist()
-    persisted.append(sharded)
+    )
 
     try:
         manifest = shard_manifest(
@@ -237,31 +236,15 @@ def main(argv: list[str] | None = None) -> int:
             manifest, os.path.join(args.output, "manifests"), mode="overwrite"
         )
 
-        done = ckpt.committed_keys()
-        todo = [s for s in range(args.n_shards) if str(s) not in done]
-        if len(todo) != args.n_shards:
-            print(
-                f"[curate {run_id}] skipping {args.n_shards - len(todo)} "
-                "committed shard(s)"
-            )
-        print(f"[curate {run_id}] {len(todo)} shard(s) to write")
-        for s in todo:
-            t0 = time.monotonic()
-            part = sharded.where(F.col("shard") == s)
-            write_table(
-                part, os.path.join(args.output, "data"),
-                mode="overwrite_partitions", partition_by=["shard"],
-            )
-            n = (
-                spark.read.parquet(os.path.join(args.output, "data"))
-                .where(F.col("shard") == s)
-                .count()
-            )
-            ckpt.commit(
-                str(s), None, rows_in=n, rows_out=n, run_id=run_id,
-                started_at=t0,
-            )
-            print(f"[curate {run_id}] committed shard {s}: rows={n}")
+        committed = write_slices(
+            ckpt, sharded, os.path.join(args.output, "data"),
+            partition_col="shard", keys=list(range(args.n_shards)),
+            run_id=run_id,
+        )
+        print(
+            f"[curate {run_id}] skipped {args.n_shards - len(committed)} "
+            f"committed shard(s); committed {committed}"
+        )
     finally:
         for frame in persisted:
             frame.unpersist()

@@ -2,42 +2,20 @@
 
 from __future__ import annotations
 
+import os
+import sys
 from datetime import datetime
 
-from pyspark.sql import functions as F
+import pytest
 
-from transmog_spark.checkpoint import CheckpointStore
+from transmog_spark import checkpoint
+from transmog_spark.checkpoint import CheckpointStore, write_slices
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _ts(s: str) -> datetime:
     return datetime.fromisoformat(s)
-
-
-def test_empty_store_filters_nothing(spark, tmp_path):
-    store = CheckpointStore(spark, str(tmp_path / "wm"))
-    df = spark.createDataFrame(
-        [("p1", _ts("2024-01-01T00:00:00")), ("p2", _ts("2024-01-02T00:00:00"))],
-        "part string, ts timestamp",
-    )
-    assert store.filter_resumable(df, "part", "ts").count() == 2
-
-
-def test_commit_and_resume_filter(spark, tmp_path):
-    store = CheckpointStore(spark, str(tmp_path / "wm"))
-    rows = [
-        ("p1", _ts("2024-01-01T00:00:00")),
-        ("p1", _ts("2024-01-02T00:00:00")),
-        ("p1", _ts("2024-01-03T00:00:00")),
-        ("p2", _ts("2024-01-01T12:00:00")),
-    ]
-    df = spark.createDataFrame(rows, "part string, ts timestamp")
-    store.commit(
-        "p1", _ts("2024-01-02T00:00:00"), rows_in=2, rows_out=2, run_id="r1"
-    )
-    remaining = store.filter_resumable(df, "part", "ts").collect()
-    got = sorted((r.part, r.ts.isoformat()) for r in remaining)
-    # p1 rows at/below the watermark drop; p2 untouched (no watermark)
-    assert got == [("p1", "2024-01-03T00:00:00"), ("p2", "2024-01-01T12:00:00")]
 
 
 def test_latest_watermark_wins_across_commits(spark, tmp_path):
@@ -66,18 +44,106 @@ def test_resume_is_idempotent_end_to_end(spark, tmp_path):
     """Simulated two-phase backfill: phase 1 commits p1; phase 2 resumes and
     only processes what's left; a third run is a no-op."""
     store = CheckpointStore(spark, str(tmp_path / "wm"))
+    out = str(tmp_path / "out")
     df = spark.createDataFrame(
         [("p1", _ts("2024-01-01T00:00:00")), ("p1", _ts("2024-01-02T00:00:00")),
          ("p2", _ts("2024-01-01T06:00:00"))],
         "part string, ts timestamp",
     )
+    kw = dict(partition_col="part", ts_col="ts")
     # phase 1: process p1 fully, commit its max ts
-    p1_max = df.where(F.col("part") == "p1").agg(F.max("ts")).collect()[0][0]
-    store.commit("p1", p1_max, rows_in=2, rows_out=2, run_id="r1")
+    assert write_slices(store, df, out, keys=["p1"], run_id="r1", **kw) == {"p1": 2}
+    assert store.committed_keys() == {"p1"}
     # phase 2: resume -> only p2 remains
-    rest = store.filter_resumable(df, "part", "ts")
-    assert {r.part for r in rest.collect()} == {"p2"}
-    p2_max = rest.agg(F.max("ts")).collect()[0][0]
-    store.commit("p2", p2_max, rows_in=1, rows_out=1, run_id="r2")
-    # phase 3: nothing left
-    assert store.filter_resumable(df, "part", "ts").count() == 0
+    assert write_slices(store, df, out, keys=["p1", "p2"], run_id="r2", **kw) == {"p2": 1}
+    assert store.committed_keys() == {"p1", "p2"}
+    wm = {r.partition_key: r.watermark.isoformat() for r in store.watermarks().collect()}
+    assert wm == {"p1": "2024-01-02T00:00:00", "p2": "2024-01-01T06:00:00"}
+    # phase 3: nothing left, nothing written
+    assert write_slices(store, df, out, keys=["p1", "p2"], run_id="r3", **kw) == {}
+    assert spark.read.parquet(out).count() == 3
+    assert store.read().count() == 2
+
+
+def test_commit_many_appends_a_jvm_local_relation(spark, tmp_path, monkeypatch):
+    """The append plans as LocalTableScan (no Python-list RDD); a naive
+    datetime and curate's None watermark come back from read() unchanged."""
+    frames = []
+    real = checkpoint.watermark_frame
+
+    def spy(spark_, rows):
+        frames.append(real(spark_, rows))
+        return frames[-1]
+
+    monkeypatch.setattr(checkpoint, "watermark_frame", spy)
+    store = CheckpointStore(spark, str(tmp_path / "wm"))
+    slices = [
+        ("src_hot", _ts("2024-01-02T03:04:05.678901"), 7, 7, 0),
+        ("0", None, 0, 0, 0),
+    ]
+    store.commit_many(slices, run_id="r1")
+    (frame,) = frames
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    got = sorted(tuple(r)[:6] for r in store.read().collect())
+    assert got == sorted((*s, "r1") for s in slices)
+
+
+def _backfill_main(argv):
+    sys.path.insert(0, os.path.join(REPO, "jobs"))
+    import backfill_features
+
+    assert backfill_features.main(argv) == 0
+
+
+def _jobs_in_group(spark, gid, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(gid, gid)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status listener is asynchronous: drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_backfill_jobs_do_not_grow_with_slice_count(spark, tmp_path):
+    jobs = {}
+    for n_sources in (1, 5):
+        argv = [
+            "--synth-docs", "400", "--synth-sources", str(n_sources),
+            "--output", str(tmp_path / f"out{n_sources}"),
+            "--checkpoint", str(tmp_path / f"ckpt{n_sources}"),
+        ]
+        jobs[n_sources] = _jobs_in_group(
+            spark, f"backfill-{n_sources}-{tmp_path.name}", lambda: _backfill_main(argv)
+        )
+        assert CheckpointStore(spark, argv[-1]).read().count() == n_sources + 1
+    assert jobs[1] == jobs[5], jobs
+
+
+def test_crash_before_commit_leaves_slices_uncommitted(spark, tmp_path, monkeypatch):
+    """A crash in the one checkpoint append commits nothing; the re-run
+    rewrites the same rows (dynamic overwrite, not doubled) and commits
+    every slice."""
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    argv = ["--synth-docs", "400", "--synth-sources", "2", "--output", out, "--checkpoint", ckpt]
+
+    def crash(self, *a, **k):
+        raise RuntimeError("killed before the checkpoint append")
+
+    monkeypatch.setattr(CheckpointStore, "commit_many", crash)
+    with pytest.raises(RuntimeError):
+        _backfill_main(argv)
+    monkeypatch.undo()
+    store = CheckpointStore(spark, ckpt)
+    assert store.committed_keys() == set()
+    cols = ["doc_id", "ts", "source", "feature_ts", "session_index"]
+    first = sorted(map(tuple, spark.read.parquet(out).select(cols).collect()))
+    assert len(first) == 400
+
+    _backfill_main(argv)
+    assert sorted(map(tuple, spark.read.parquet(out).select(cols).collect())) == first
+    assert store.committed_keys() == {"src_00", "src_01", "src_hot"}

@@ -1,11 +1,14 @@
 """Per-partition watermark checkpoints + lineage metrics (north rule §7.8).
 
 A backfill over 10^12 sequences cannot be one atomic job; this module makes
-it resumable: after each partition range (e.g. a ``source`` × day slice)
-completes, a watermark row is appended atomically (parquet append of a
-single-row DataFrame). On resume, the input is filtered to ``ts >
-watermark`` per partition key — idempotent when ids are deterministic
-(hash/xxhash64 strategies), since re-emitted rows dedupe on ``_id``.
+it resumable at slice granularity. A slice is one value of the output's
+partition column (a ``source``, a shard). ``write_slices`` writes every
+pending slice in one dynamic-partition-overwrite write, then appends one
+watermark row per slice in a single multi-row append. On resume, committed
+slices are skipped whole — never ts-filtered — and the rest are re-run: a
+crash before the append leaves every pending slice uncommitted, and the
+dynamic overwrite replaces whatever the crashed run wrote, so a re-run
+cannot duplicate rows.
 
 Lineage metrics mirror the reference's logging counters
 (/root/reference/src/transmog/streaming.py:88-94) as a queryable table
@@ -15,11 +18,17 @@ instead of log lines.
 from __future__ import annotations
 
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from transmog_spark.sources.tables import read_table, write_table
+
+# one row per committed slice per run; ``wall_ms`` is the wall time of the
+# batch that committed it (all of a run's slices are written together, so
+# every row of one append carries the same value)
 WATERMARK_SCHEMA = T.StructType(
     [
         T.StructField("partition_key", T.StringType(), False),
@@ -33,6 +42,37 @@ WATERMARK_SCHEMA = T.StructType(
 )
 
 
+def _sql_literal(value, dtype: T.DataType) -> str:
+    """A constant of ``dtype`` as SQL text: strings as UTF-8 hex (no
+    escaping), timestamps as the epoch microseconds PySpark itself stores
+    for a naive or aware ``datetime``."""
+    if value is None:
+        return f"CAST(NULL AS {dtype.simpleString()})"
+    if isinstance(dtype, T.StringType):
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    if isinstance(dtype, T.TimestampType):
+        return f"timestamp_micros({dtype.toInternal(value)})"
+    return f"CAST({int(value)} AS {dtype.simpleString()})"
+
+
+def watermark_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """``rows`` (in ``WATERMARK_SCHEMA`` order) as a JVM-local relation.
+
+    An inline ``VALUES`` table of constants plans as ``LocalTableScan``;
+    ``createDataFrame`` over a Python list plans as ``Scan ExistingRDD``,
+    whose write is several times slower for a handful of rows. No rows
+    gives an empty local relation (``LIMIT 0``), which runs no Spark job.
+    """
+    fields = WATERMARK_SCHEMA.fields
+    values = ", ".join(
+        "(" + ", ".join(_sql_literal(v, f.dataType) for v, f in zip(row, fields)) + ")"
+        for row in rows or [(None,) * len(fields)]
+    )
+    names = ", ".join(f.name for f in fields)
+    limit = "" if rows else " LIMIT 0"
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names}){limit}")
+
+
 class CheckpointStore:
     """Watermark bookkeeping over a parquet (or Iceberg) side table."""
 
@@ -43,14 +83,29 @@ class CheckpointStore:
     def read(self) -> DataFrame:
         try:
             return self.spark.read.schema(WATERMARK_SCHEMA).parquet(self.path)
-        except Exception:
-            return self.spark.createDataFrame([], WATERMARK_SCHEMA)
+        except Exception:  # nothing committed yet
+            return watermark_frame(self.spark, [])
 
     def watermarks(self) -> DataFrame:
         """Latest watermark per partition key."""
         df = self.read()
         return df.groupBy("partition_key").agg(
             F.max("max_ts_processed").alias("watermark")
+        )
+
+    def commit_many(
+        self,
+        slices: list[tuple],
+        *,
+        run_id: str,
+        started_at: float | None = None,
+    ) -> None:
+        """Append one watermark row per ``(partition_key, max_ts_processed,
+        rows_in, rows_out, child_rows)`` in a single one-file append."""
+        wall_ms = int((time.monotonic() - started_at) * 1000) if started_at else None
+        rows = [(*s, run_id, wall_ms) for s in slices]
+        watermark_frame(self.spark, rows).coalesce(1).write.mode("append").parquet(
+            self.path
         )
 
     def commit(
@@ -64,42 +119,72 @@ class CheckpointStore:
         run_id: str,
         started_at: float | None = None,
     ) -> None:
-        wall_ms = int((time.monotonic() - started_at) * 1000) if started_at else None
-        row = [
-            (
-                partition_key,
-                max_ts_processed,
-                rows_in,
-                rows_out,
-                child_rows,
-                run_id,
-                wall_ms,
-            )
-        ]
-        self.spark.createDataFrame(row, WATERMARK_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.path)
+        self.commit_many(
+            [(partition_key, max_ts_processed, rows_in, rows_out, child_rows)],
+            run_id=run_id,
+            started_at=started_at,
+        )
 
     def committed_keys(self) -> set[str]:
         """Partition keys with a committed watermark (commit happens only
-        after a slice's write completed, so presence == fully done)."""
-        return {r[0] for r in self.watermarks().select("partition_key").collect()}
+        after a slice's write completed, so presence == fully done). The
+        side table is tiny: collect the key column, dedupe on the driver."""
+        return {r[0] for r in self.read().select("partition_key").collect()}
 
-    def filter_resumable(
-        self, df: DataFrame, partition_col: str, ts_col: str
-    ) -> DataFrame:
-        """Drop rows at or below each partition's committed watermark.
 
-        Broadcast the (tiny) watermark table; null watermark = never
-        processed = keep everything.
+def write_slices(
+    store: CheckpointStore,
+    frame: DataFrame,
+    output: str,
+    *,
+    partition_col: str,
+    keys: list,
+    run_id: str,
+    ts_col: str | None = None,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+) -> dict[str, int]:
+    """Write and commit every slice of ``frame`` whose key is uncommitted.
 
-        NOTE: for one-shot backfills over partition-overwrite sinks, use
-        ``committed_keys`` to skip whole slices instead — ts-filtering a
-        committed partition and then overwriting it would drop the already
-        -written rows if the input grew after the commit.
-        """
-        wm = self.watermarks().withColumnRenamed("partition_key", partition_col)
-        joined = df.join(F.broadcast(wm), on=partition_col, how="left")
-        return joined.where(
-            F.col("watermark").isNull() | (F.col(ts_col) > F.col("watermark"))
-        ).drop("watermark")
+    All pending slices go through one plan: ``frame`` filtered to
+    ``partition_col`` in the pending keys (then ``transform``, e.g. the
+    backfill's feature plan and range layout), one ``overwrite_partitions``
+    write, one grouped aggregate over the written files for each slice's
+    row count and max ``ts_col``, and one multi-row ``commit_many``. Nothing
+    is written when every key is committed.
+
+    Returns the rows written per newly committed key (a key with no rows
+    commits 0, so an empty shard is not redone on resume).
+    """
+    done = store.committed_keys()
+    pending = [k for k in keys if str(k) not in done]
+    if not pending:
+        return {}
+    t0 = time.monotonic()
+    in_pending = F.col(partition_col).isin(pending)
+    part = frame.where(in_pending)
+    write_table(
+        transform(part) if transform else part,
+        output,
+        mode="overwrite_partitions",
+        partition_by=[partition_col],
+    )
+    # lineage stats from the WRITTEN files, not a second input pass:
+    # partition pruning keeps the read to the pending slices
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if ts_col:
+        aggs.append(F.max(ts_col).alias("mx"))
+    stats = {
+        str(r[partition_col]): r
+        for r in read_table(store.spark, output)
+        .where(in_pending)
+        .groupBy(partition_col)
+        .agg(*aggs)
+        .collect()
+    }
+    commits = []
+    for k in map(str, pending):
+        st = stats.get(k)
+        n = st["n"] if st else 0
+        commits.append((k, st["mx"] if st and ts_col else None, n, n, 0))
+    store.commit_many(commits, run_id=run_id, started_at=t0)
+    return {c[0]: c[2] for c in commits}
