@@ -151,8 +151,9 @@ def main(argv: list[str] | None = None) -> int:
         run_id=run_id, ts_col=args.ts_col, transform=layout,
     )
     print(
-        f"[backfill {run_id}] skipped {len(keys) - len(committed)} committed "
-        f"slice(s); committed {committed}"
+        f"[backfill {run_id}] committed {len(committed)} slice(s), "
+        f"{sum(committed.values())} rows; skipped "
+        f"{len(keys) - len(committed)} already committed"
     )
     print(f"[backfill {run_id}] done")
     return 0

@@ -22,9 +22,9 @@ The compaction:
 4. checkpointed partition rewrite: every uncommitted ``source`` slice of
    the kept frame goes out in one dynamic-partition-overwrite write, then
    one checkpoint append records them all (``checkpoint.write_slices``) —
-   a killed compaction re-runs every slice it had not committed. The global verdict
-   frame is deterministic (seeded hashes, min-id rules), so a resumed
-   run recomputes the identical verdicts.
+   a killed compaction re-runs every slice it had not committed. The
+   global verdict frame is deterministic (seeded hashes, min-id rules),
+   so a resumed run recomputes the identical verdicts.
 
 Equality contract (pinned by tests/test_compact_job.py): when per-batch
 near-dup removal only collapsed genuine cluster subsets (trivially true
@@ -133,8 +133,9 @@ def main(argv: list[str] | None = None) -> int:
             run_id=run_id,
         )
         print(
-            f"[compact {run_id}] skipped {len(keys) - len(committed)} "
-            f"committed slice(s); committed {committed}"
+            f"[compact {run_id}] committed {len(committed)} slice(s), "
+            f"{sum(committed.values())} rows; skipped "
+            f"{len(keys) - len(committed)} already committed"
         )
     finally:
         kept.unpersist()

@@ -242,8 +242,9 @@ def main(argv: list[str] | None = None) -> int:
             run_id=run_id,
         )
         print(
-            f"[curate {run_id}] skipped {args.n_shards - len(committed)} "
-            f"committed shard(s); committed {committed}"
+            f"[curate {run_id}] committed {len(committed)} shard(s), "
+            f"{sum(committed.values())} rows; skipped "
+            f"{args.n_shards - len(committed)} already committed"
         )
     finally:
         for frame in persisted:

@@ -10,7 +10,7 @@ file count. The result is stored under ``--label`` in ``--out`` (other
 labels in that file are kept), so running the script on two checkouts
 gives a before/after pair.
 
-Usage: python scripts/backfill_slices_bench.py --label after \
+Usage: python scripts/backfill_slices_bench.py --label after
     [--docs 30000] [--sources 19] [--runs 3] [--out BENCH/backfill_slices.json]
 """
 

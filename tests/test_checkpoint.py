@@ -11,7 +11,7 @@ import pytest
 from transmog_spark import checkpoint
 from transmog_spark.checkpoint import CheckpointStore, write_slices
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
 
 
 def _ts(s: str) -> datetime:
@@ -90,7 +90,6 @@ def test_commit_many_appends_a_jvm_local_relation(spark, tmp_path, monkeypatch):
 
 
 def _backfill_main(argv):
-    sys.path.insert(0, os.path.join(REPO, "jobs"))
     import backfill_features
 
     assert backfill_features.main(argv) == 0
