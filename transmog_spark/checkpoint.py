@@ -170,21 +170,18 @@ def write_slices(
     )
     # lineage stats from the WRITTEN files, not a second input pass:
     # partition pruning keeps the read to the pending slices
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if ts_col:
-        aggs.append(F.max(ts_col).alias("mx"))
-    stats = {
-        str(r[partition_col]): r
-        for r in read_table(store.spark, output)
+    max_ts = F.max(ts_col) if ts_col else F.lit(None).cast("timestamp")
+    written = (
+        read_table(store.spark, output)
         .where(in_pending)
         .groupBy(partition_col)
-        .agg(*aggs)
+        .agg(F.count(F.lit(1)), max_ts)
         .collect()
-    }
+    )
+    stats = {str(key): (n, ts) for key, n, ts in written}
     commits = []
     for k in map(str, pending):
-        st = stats.get(k)
-        n = st["n"] if st else 0
-        commits.append((k, st["mx"] if st and ts_col else None, n, n, 0))
+        n, ts = stats.get(k, (0, None))
+        commits.append((k, ts, n, n, 0))
     store.commit_many(commits, run_id=run_id, started_at=t0)
-    return {c[0]: c[2] for c in commits}
+    return {k: n for k, _, n, _, _ in commits}
