@@ -126,7 +126,7 @@ def main(argv: list[str] | None = None) -> int:
     seqs, events = build_inputs(spark, args)
 
     # slice list is tiny (one per source) — a driver-side list is fine
-    keys = sorted(r[0] for r in seqs.select(args.partition_col).distinct().collect())
+    keys = [r[0] for r in seqs.select(args.partition_col).distinct().collect()]
 
     def layout(part):
         # one plan over every pending slice, so `events` is shuffled once
@@ -146,14 +146,9 @@ def main(argv: list[str] | None = None) -> int:
     # input grew after the commit (the one-shot contract, now enforced).
     # The pipeline is row-preserving (as-of/sessionize/lag add columns, not
     # rows), so each slice commits rows_in == rows_out == its written rows.
-    committed = write_slices(
+    write_slices(
         store, seqs, args.output, partition_col=args.partition_col, keys=keys,
         run_id=run_id, ts_col=args.ts_col, transform=layout,
-    )
-    print(
-        f"[backfill {run_id}] committed {len(committed)} slice(s), "
-        f"{sum(committed.values())} rows; skipped "
-        f"{len(keys) - len(committed)} already committed"
     )
     print(f"[backfill {run_id}] done")
     return 0

@@ -127,15 +127,10 @@ def main(argv: list[str] | None = None) -> int:
     # persist the stage boundary so the chain runs once
     kept = compact_frame(store, args).persist()
     try:
-        keys = sorted(r[0] for r in kept.select(args.source_col).distinct().collect())
-        committed = write_slices(
+        keys = [r[0] for r in kept.select(args.source_col).distinct().collect()]
+        write_slices(
             ckpt, kept, args.output, partition_col=args.source_col, keys=keys,
             run_id=run_id,
-        )
-        print(
-            f"[compact {run_id}] committed {len(committed)} slice(s), "
-            f"{sum(committed.values())} rows; skipped "
-            f"{len(keys) - len(committed)} already committed"
         )
     finally:
         kept.unpersist()

@@ -236,15 +236,10 @@ def main(argv: list[str] | None = None) -> int:
             manifest, os.path.join(args.output, "manifests"), mode="overwrite"
         )
 
-        committed = write_slices(
+        write_slices(
             ckpt, sharded, os.path.join(args.output, "data"),
             partition_col="shard", keys=list(range(args.n_shards)),
             run_id=run_id,
-        )
-        print(
-            f"[curate {run_id}] committed {len(committed)} shard(s), "
-            f"{sum(committed.values())} rows; skipped "
-            f"{args.n_shards - len(committed)} already committed"
         )
     finally:
         for frame in persisted:

@@ -2,16 +2,15 @@
 """Slice-count scaling of the checkpointed backfill job.
 
 Runs ``jobs/backfill_features.main`` over synthetic inputs with many
-``source`` slices: one cold run, then ``--runs`` warm runs into fresh
+``source`` slices: one cold run, then ``RUNS`` warm runs into fresh
 output/checkpoint directories, each under its own job group. Reports the
 median warm wall time and, from Spark's status store (perfbench's reader),
 jobs, tasks, task CPU and shuffle records per output row, plus the output
-file count. The result is stored under ``--label`` in ``--out`` (other
-labels in that file are kept), so running the script on two checkouts
-gives a before/after pair.
+file count. The result is stored under ``--label`` in
+``BENCH/backfill_slices.json`` (other labels in that file are kept), so
+running the script on two checkouts gives a before/after pair.
 
 Usage: python scripts/backfill_slices_bench.py --label after
-    [--docs 30000] [--sources 19] [--runs 3] [--out BENCH/backfill_slices.json]
 """
 
 from __future__ import annotations
@@ -29,14 +28,13 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [REPO, os.path.join(REPO, "jobs"), os.path.join(REPO, "perfbench")]
 
+DOCS, SOURCES, RUNS = 30_000, 19, 3  # 19 sources + the hot one = 20 slices
+OUT = os.path.join(REPO, "BENCH", "backfill_slices.json")
+
 
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--label", required=True)
-    p.add_argument("--docs", type=int, default=30_000)
-    p.add_argument("--sources", type=int, default=19)
-    p.add_argument("--runs", type=int, default=3)
-    p.add_argument("--out", default=os.path.join(REPO, "BENCH", "backfill_slices.json"))
     args = p.parse_args()
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
@@ -50,9 +48,9 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="backfill_slices_")
     runs = []
     try:
-        for k in range(args.runs + 1):
+        for k in range(RUNS + 1):
             out, ckpt = os.path.join(work, f"out{k}"), os.path.join(work, f"ckpt{k}")
-            argv = ["--synth-docs", str(args.docs), "--synth-sources", str(args.sources),
+            argv = ["--synth-docs", str(DOCS), "--synth-sources", str(SOURCES),
                     "--output", out, "--checkpoint", ckpt]
             with reader.group(f"run{k}") as gid, contextlib.redirect_stdout(sys.stderr):
                 t0 = time.perf_counter()
@@ -68,8 +66,8 @@ def main() -> None:
     warm = runs[1:]
     mid = sorted(warm, key=lambda r: r["wall_s"])[len(warm) // 2]
     result = {
-        "docs": args.docs,
-        "slices": args.sources + 1,
+        "docs": DOCS,
+        "slices": SOURCES + 1,
         "cpus": len(os.sched_getaffinity(0)),
         "cold_wall_s": round(runs[0]["wall_s"], 2),
         "warm_wall_s": round(statistics.median(r["wall_s"] for r in warm), 2),
@@ -77,15 +75,15 @@ def main() -> None:
         "jobs": mid["jobs"],
         "tasks": mid["tasks"],
         "task_cpu_s": round(mid["task_cpu_s"], 2),
-        "shuffle_records_per_row": round(mid["shuffle_write_records"] / args.docs, 2),
+        "shuffle_records_per_row": round(mid["shuffle_write_records"] / DOCS, 2),
         "output_files": mid["files"],
     }
     doc = {}
-    if os.path.exists(args.out):
-        with open(args.out) as f:
+    if os.path.exists(OUT):
+        with open(OUT) as f:
             doc = json.load(f)
     doc[args.label] = result
-    with open(args.out, "w") as f:
+    with open(OUT, "w") as f:
         json.dump(doc, f, indent=2)
         f.write("\n")
     print(json.dumps({args.label: result}))

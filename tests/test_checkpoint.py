@@ -65,6 +65,29 @@ def test_resume_is_idempotent_end_to_end(spark, tmp_path):
     assert store.read().count() == 2
 
 
+def test_numeric_looking_string_keys_keep_their_stats(spark, tmp_path):
+    """Keys such as "01" are matched as written: the stats read back from
+    the output do not turn the partition directory "01" into the int 1, and
+    the session's partition type inference is left as it was."""
+    store = CheckpointStore(spark, str(tmp_path / "wm"))
+    df = spark.createDataFrame(
+        [("01", _ts("2024-01-01T00:00:00")), ("01", _ts("2024-01-03T00:00:00")),
+         ("007", _ts("2024-01-02T00:00:00"))],
+        "part string, ts timestamp",
+    )
+    infer = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    before = spark.conf.get(infer)
+    got = write_slices(
+        store, df, str(tmp_path / "out"), partition_col="part", keys=["01", "007"],
+        run_id="r1", ts_col="ts",
+    )
+    assert got == {"01": 2, "007": 1}
+    rows = {r.partition_key: (r.max_ts_processed.isoformat(), r.rows_in, r.rows_out)
+            for r in store.read().collect()}
+    assert rows == {"01": ("2024-01-03T00:00:00", 2, 2), "007": ("2024-01-02T00:00:00", 1, 1)}
+    assert spark.conf.get(infer) == before
+
+
 def test_commit_many_appends_a_jvm_local_relation(spark, tmp_path, monkeypatch):
     """The append plans as LocalTableScan (no Python-list RDD); a naive
     datetime and curate's None watermark come back from read() unchanged."""

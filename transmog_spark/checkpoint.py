@@ -152,36 +152,60 @@ def write_slices(
     row count and max ``ts_col``, and one multi-row ``commit_many``. Nothing
     is written when every key is committed.
 
-    Returns the rows written per newly committed key (a key with no rows
-    commits 0, so an empty shard is not redone on resume).
+    Prints a ``run_id``-tagged summary line and returns the rows written
+    per newly committed key (a key with no rows commits 0, so an empty
+    shard is not redone on resume).
     """
     done = store.committed_keys()
     pending = [k for k in keys if str(k) not in done]
-    if not pending:
-        return {}
-    t0 = time.monotonic()
-    in_pending = F.col(partition_col).isin(pending)
-    part = frame.where(in_pending)
-    write_table(
-        transform(part) if transform else part,
-        output,
-        mode="overwrite_partitions",
-        partition_by=[partition_col],
+    if pending:
+        t0 = time.monotonic()
+        part = frame.where(F.col(partition_col).isin(pending))
+        write_table(
+            transform(part) if transform else part,
+            output,
+            mode="overwrite_partitions",
+            partition_by=[partition_col],
+        )
+        commits = _written_slices(store.spark, output, partition_col, ts_col, pending)
+        store.commit_many(commits, run_id=run_id, started_at=t0)
+    else:
+        commits = []
+    committed = {k: n for k, _, n, _, _ in commits}
+    print(
+        f"[{run_id}] committed {len(committed)} slice(s), "
+        f"{sum(committed.values())} rows; skipped {len(keys) - len(committed)} "
+        "already committed"
     )
-    # lineage stats from the WRITTEN files, not a second input pass:
-    # partition pruning keeps the read to the pending slices
-    max_ts = F.max(ts_col) if ts_col else F.lit(None).cast("timestamp")
-    written = (
-        read_table(store.spark, output)
-        .where(in_pending)
-        .groupBy(partition_col)
-        .agg(F.count(F.lit(1)), max_ts)
-        .collect()
-    )
+    return committed
+
+
+def _written_slices(
+    spark: SparkSession, output: str, partition_col: str, ts_col: str | None, pending: list
+) -> list[tuple]:
+    """One ``commit_many`` tuple per pending key, with its row count and max
+    ``ts_col`` from the WRITTEN files (not a second input pass; partition
+    pruning keeps the read to the pending slices). Partition values are read
+    back as the directory names (``str(key)``), not type-inferred, so a key
+    such as ``"01"`` is not read back as the int 1."""
+    keys = [str(k) for k in pending]
+    infer = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(infer)
+    spark.conf.set(infer, "false")
+    try:
+        max_ts = F.max(ts_col) if ts_col else F.lit(None).cast("timestamp")
+        written = (
+            read_table(spark, output)
+            .where(F.col(partition_col).cast("string").isin(keys))
+            .groupBy(partition_col)
+            .agg(F.count(F.lit(1)), max_ts)
+            .collect()
+        )
+    finally:
+        spark.conf.set(infer, prev)
     stats = {str(key): (n, ts) for key, n, ts in written}
     commits = []
-    for k in map(str, pending):
+    for k in keys:
         n, ts = stats.get(k, (0, None))
         commits.append((k, ts, n, n, 0))
-    store.commit_many(commits, run_id=run_id, started_at=t0)
-    return {k: n for k, _, n, _, _ in commits}
+    return commits
