@@ -13,7 +13,7 @@ collect). Also runs the north-rule tokenized-sequence pipeline
 table sized to the scale factor and reports its throughput in
 sequences/sec (the BASELINE.md headline metric).
 
-For the N-vs-4N scaling-efficiency evidence run ``scripts/scaling_bench.py``
+For the N-vs-4N scaling-efficiency evidence run ``scripts/scale_bench.py``
 (fresh JVM per parallelism level; results land in BENCH/BASELINE.md).
 """
 

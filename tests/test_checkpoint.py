@@ -7,6 +7,7 @@ import sys
 from datetime import datetime
 
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from transmog_spark import checkpoint
 from transmog_spark.checkpoint import CheckpointStore, write_slices
@@ -38,6 +39,20 @@ def test_lineage_metrics_queryable(spark, tmp_path):
     )
     row = store.read().collect()[0]
     assert (row.rows_in, row.rows_out, row.child_rows, row.run_id) == (100, 98, 250, "r1")
+
+
+def test_fresh_path_reads_as_empty(spark, tmp_path):
+    store = CheckpointStore(spark, str(tmp_path / "never_written"))
+    assert store.read().collect() == []
+    assert store.committed_keys() == set()
+
+
+def test_unsupported_scheme_raises(spark):
+    """A misconfigured store must not read as "nothing committed": that
+    would redo and overwrite every slice."""
+    store = CheckpointStore(spark, "nosuchfs://bucket/wm")
+    with pytest.raises(Py4JJavaError, match="nosuchfs"):
+        store.read()
 
 
 def test_resume_is_idempotent_end_to_end(spark, tmp_path):

@@ -81,10 +81,14 @@ class CheckpointStore:
         self.path = path
 
     def read(self) -> DataFrame:
-        try:
-            return self.spark.read.schema(WATERMARK_SCHEMA).parquet(self.path)
-        except Exception:  # nothing committed yet
+        """Every committed row. Only a missing path reads as "nothing
+        committed"; any other failure (an unsupported scheme, an unreadable
+        store) raises instead of redoing every slice."""
+        path = self.spark._jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        if not fs.exists(path):
             return watermark_frame(self.spark, [])
+        return self.spark.read.schema(WATERMARK_SCHEMA).parquet(self.path)
 
     def watermarks(self) -> DataFrame:
         """Latest watermark per partition key."""
